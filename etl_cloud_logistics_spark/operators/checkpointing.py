@@ -221,10 +221,8 @@ class RoundCheckpointer:
         measured big-graph path, where one extra job is noise)."""
         if self.run_dir is None:
             if pin_key is not None:
-                out = df.repartition(pin_key).persist()
-                out.count()  # eager, like the checkpoint path
-                self._persisted_statics.append(out)
-            elif lazy:
+                return self.repin(df, pin_key)
+            if lazy:
                 out = df.persist()
                 self._persisted_statics.append(out)
             else:
@@ -236,9 +234,7 @@ class RoundCheckpointer:
         df.write.mode("overwrite").parquet(path)
         out = df.sparkSession.read.parquet(path)
         if pin_key is not None:
-            out = out.repartition(pin_key).persist()
-            out.count()
-            self._persisted_statics.append(out)
+            return self.repin(out, pin_key)
         out._rc_slot_kind = "static"
         return out
 

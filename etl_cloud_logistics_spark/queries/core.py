@@ -24,7 +24,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
-from ..functions import avg_exact, day_name, dow_pg, safe_div, sum_exact
+from ..functions import (
+    avg_exact,
+    avg_round_half_up,
+    day_name,
+    dow_pg,
+    round_half_up_ratio,
+    safe_div,
+    sum_exact,
+)
 from . import register
 
 # Deterministic anchors replacing the reference's CURRENT_DATE arithmetic.
@@ -742,8 +750,8 @@ def q10b_rank_within_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH mensual AS (
         SELECT date_trunc('month', o_orderdate) AS mes,
                COUNT(*) AS total_viajes,
-               {_sumx('o_totalprice')} AS peso_total,
-               {_avgx('o_totalprice')} AS precio_promedio
+               SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS peso_total,
+               COUNT(o_totalprice) AS n_precios
         FROM orders
         WHERE o_orderstatus = 'F'
         GROUP BY date_trunc('month', o_orderdate)
@@ -756,8 +764,10 @@ def q10b_rank_within_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         total_viajes - LAG(total_viajes, 1) OVER (ORDER BY mes) AS cambio_absoluto,
         ROUND((total_viajes - LAG(total_viajes, 1) OVER (ORDER BY mes)) * 100.0
               / NULLIF(LAG(total_viajes, 1) OVER (ORDER BY mes), 0), 2) AS cambio_porcentual,
-        ROUND(peso_total / 1000, 2) AS toneladas_transportadas,
-        ROUND(precio_promedio, 2) AS precio_promedio_viaje,
+        CAST((2 * CAST(peso_total * 1000000 AS HUGEINT) * 100 + 1000 * 1000000)
+             // (2 * 1000 * 1000000) AS DOUBLE) / 100 AS toneladas_transportadas,
+        CAST((2 * CAST(peso_total * 1000000 AS HUGEINT) * 100 + n_precios * 1000000)
+             // (2 * n_precios * 1000000) AS DOUBLE) / 100 AS precio_promedio_viaje,
         AVG(total_viajes) OVER (ORDER BY mes ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
             AS promedio_movil_3m
     FROM mensual
@@ -767,7 +777,9 @@ def q10b_rank_within_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month trend: LAG/LEAD deltas, % change, 3-month moving
-    average (ref 02:221-244).
+    average (ref 02:221-244).  Tonnage and average price round half-up
+    in exact integer space: ``ROUND(double, 2)`` splits Spark from DuckDB
+    whenever a monthly value lands exactly on a half-cent.
 
     Scale: the window is global-order but over ~1 row per month — the heavy
     lifting (the monthly agg) shuffles once on the truncated month key."""
@@ -776,8 +788,12 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", "o_orderdate").alias("mes")
     ).agg(
         F.count("*").alias("total_viajes"),
-        sum_exact("o_totalprice").alias("peso_total"),
-        avg_exact("o_totalprice").alias("precio_promedio"),
+        round_half_up_ratio(
+            F.sum(F.col("o_totalprice").cast("decimal(38,6)")), F.lit(1000), 2
+        ).alias("toneladas_transportadas"),
+        avg_round_half_up(
+            "o_totalprice", F.count("o_totalprice"), 2
+        ).alias("precio_promedio_viaje"),
     )
     w = W.orderBy("mes")
     prev = F.lag("total_viajes", 1).over(w)
@@ -793,8 +809,8 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("total_viajes") - prev) * F.lit(100.0) / F.when(prev != 0, prev),
                 2,
             ).alias("cambio_porcentual"),
-            F.round(F.col("peso_total") / 1000, 2).alias("toneladas_transportadas"),
-            F.round("precio_promedio", 2).alias("precio_promedio_viaje"),
+            F.col("toneladas_transportadas"),
+            F.col("precio_promedio_viaje"),
             F.avg("total_viajes")
             .over(w.rowsBetween(-2, 0))
             .alias("promedio_movil_3m"),

@@ -183,10 +183,6 @@ def _collect_stats(
     return {c: [mins[c], maxs[c]] for c in cols}, per_file
 
 
-def _dir_stats(path: str, cols: list[str]) -> dict[str, list] | None:
-    return _collect_stats(path, cols)[0]
-
-
 def _ranges_disjoint(file_stats: dict[str, list], bounds: dict[str, tuple]) -> bool:
     """True when the file's key ranges prove it cannot contain any bounded
     key: for composite keys it is enough that ONE key column's ranges are

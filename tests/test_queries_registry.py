@@ -229,3 +229,51 @@ def test_pagerank_fixed_8_iters_orders_like_converged_float(spark, sf_small):
         and abs(flt[a] - flt[b]) / max(flt[a], flt[b]) >= 0.06
     ]
     assert not bad, f"inversions across non-tie gaps: {bad[:5]}"
+
+
+def test_q11_half_cent_rounding_matches_oracle(spark, tmp_path):
+    """q11's monthly average price and tonnage land exactly on a half-cent
+    here (avg(1.00, 1.01) = 1.005; 1005 / 1000 = 1.005).  ``ROUND(double,
+    2)`` splits the engines at that boundary — Spark rounds the shortest
+    decimal repr up to 1.01, DuckDB scales the double 1.00499.. and gets
+    1.00 — so both sides must round half-up in exact integer space."""
+    import datetime as dt
+    import os
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools.verify_local import compare, typed_hash
+
+    pq.write_table(
+        pa.table(
+            {
+                "o_orderkey": pa.array([1, 2, 3, 4], pa.int64()),
+                "o_custkey": pa.array([1, 1, 2, 2], pa.int64()),
+                "o_orderstatus": ["F"] * 4,
+                "o_totalprice": [1.00, 1.01, 502.0, 503.0],
+                "o_orderdate": pa.array(
+                    [dt.datetime(2000, 1, 5), dt.datetime(2000, 1, 9),
+                     dt.datetime(2000, 2, 3), dt.datetime(2000, 2, 7)],
+                    pa.timestamp("us"),
+                ),
+                "o_orderpriority": ["1-URGENT"] * 4,
+            }
+        ),
+        tmp_path / "orders.parquet",
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{tmp_path}/orders.parquet')"
+    )
+    spec = REGISTRY["q11_monthly_trend"]
+    sdf = spec.fn(spark, str(tmp_path)).toPandas()
+    ddf = con.execute(spec.oracle).df()
+    got = sdf.set_index("periodo")
+    assert got.loc["2000-01", "precio_promedio_viaje"] == 1.01
+    assert got.loc["2000-02", "toneladas_transportadas"] == 1.01
+    problems = compare("q11_monthly_trend", sdf, ddf)
+    assert not problems, problems
+    assert typed_hash(sdf) == typed_hash(ddf)

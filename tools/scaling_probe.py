@@ -83,6 +83,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from etl_cloud_logistics_spark.catalog import load_table  # noqa: E402
+from etl_cloud_logistics_spark.metrics import measure  # noqa: E402
 from etl_cloud_logistics_spark.operators.dedup import (  # noqa: E402
     minhash_lsh_neardup,
     neardup_components,
@@ -384,8 +385,6 @@ def powerlaw_probe(es: list[int]) -> None:
     sought: per-round PageRank shuffle grows ~O(E) (column pr_MB/rnd),
     BFS shuffle is frontier/edge-bounded, not walk-enumeration-bounded,
     and no super-linear wall blowup appears across 1e5 -> 1e7."""
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.operators.dedup import (  # noqa: PLC0415
         neardup_components,
     )
@@ -395,12 +394,6 @@ def powerlaw_probe(es: list[int]) -> None:
     )
 
     spark = get_spark("scaling-probe-powerlaw")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     def powerlaw_edges(n_edges: int):
         return _powerlaw_edges(spark, n_edges)
 
@@ -455,12 +448,11 @@ def powerlaw_probe(es: list[int]) -> None:
                 ).write.mode("overwrite").format("noop").save(),
             ),
         ):
-            before = exec_ids()
-            t0 = time.perf_counter()
-            fn()
-            wall = time.perf_counter() - t0
-            m = _execution_metrics(store, exec_ids() - before)
-            rows[op] = (wall, m.get("shuffle bytes written", 0.0) / 2**20)
+            with measure(spark) as m:
+                t0 = time.perf_counter()
+                fn()
+                wall = time.perf_counter() - t0
+            rows[op] = (wall, m.mb("shuffle bytes written"))
             spark.catalog.clearCache()
         return rows
 
@@ -510,18 +502,10 @@ def sssp_probe(es: list[int]) -> None:
     from the min-id node, both durability modes; the reached-count and
     min-plus checksum pin local == reliable (bit-exact independence from
     the checkpoint mechanism)."""
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.operators.graph import sssp_fixed  # noqa: PLC0415
 
     N_ROUNDS = 8
     spark = get_spark("scaling-probe-sssp")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     def weighted(edges):
         return edges.select(
             "src",
@@ -533,22 +517,19 @@ def sssp_probe(es: list[int]) -> None:
         )
 
     def run(edges, seeds, chk_dir):
-        before = exec_ids()
-        t0 = time.perf_counter()
-        row = (
-            sssp_fixed(edges, seeds, n_rounds=N_ROUNDS, checkpoint_dir=chk_dir)
-            .agg(
-                F.count(F.lit(1)).alias("reached"),
-                F.sum(F.col("dist") * F.col("dist")).alias("chk"),
+        with measure(spark) as m:
+            t0 = time.perf_counter()
+            row = (
+                sssp_fixed(edges, seeds, n_rounds=N_ROUNDS, checkpoint_dir=chk_dir)
+                .agg(
+                    F.count(F.lit(1)).alias("reached"),
+                    F.sum(F.col("dist") * F.col("dist")).alias("chk"),
+                )
+                .collect()[0]
             )
-            .collect()[0]
-        )
-        wall = time.perf_counter() - t0
-        mb = _execution_metrics(store, exec_ids() - before).get(
-            "shuffle bytes written", 0.0
-        ) / 2**20
+            wall = time.perf_counter() - t0
         spark.catalog.clearCache()
-        return wall, mb, int(row["reached"]), int(row["chk"])
+        return wall, m.mb("shuffle bytes written"), int(row["reached"]), int(row["chk"])
 
     import shutil
     import tempfile
@@ -606,8 +587,6 @@ def triangle_probe(es: list[int]) -> None:
       wedge count — no silent cap) and pin its triangle total to the
       oriented run's: the two enumerations must agree exactly.
     """
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.operators.graph import (  # noqa: PLC0415
         triangle_stats,
     )
@@ -615,12 +594,6 @@ def triangle_probe(es: list[int]) -> None:
     WEDGE_CAP = 300_000_000
 
     spark = get_spark("scaling-probe-triangles")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     def canonical(edges):
         return (
             edges.filter("src <> dst")
@@ -704,17 +677,15 @@ def triangle_probe(es: list[int]) -> None:
             F.count(F.lit(1)).alias("n"), F.max("d").alias("m")
         ).collect()[0]
 
-        before = exec_ids()
-        t0 = time.perf_counter()
-        srow = (
-            triangle_stats(e, src_col="lo", dst_col="hi")
-            .agg(F.sum("triangles").alias("t"))
-            .collect()[0]
-        )
-        deg_s = time.perf_counter() - t0
-        deg_mb = _execution_metrics(store, exec_ids() - before).get(
-            "shuffle bytes written", 0.0
-        ) / 2**20
+        with measure(spark) as m:
+            t0 = time.perf_counter()
+            srow = (
+                triangle_stats(e, src_col="lo", dst_col="hi")
+                .agg(F.sum("triangles").alias("t"))
+                .collect()[0]
+            )
+            deg_s = time.perf_counter() - t0
+        deg_mb = m.mb("shuffle bytes written")
         tri_total = int(srow["t"]) // 3
 
         if w_id <= WEDGE_CAP:
@@ -764,8 +735,6 @@ def diameter_probe(ns: list[int]) -> None:
     """
     import math
 
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.operators.dedup import (  # noqa: PLC0415
         neardup_components,
     )
@@ -774,12 +743,6 @@ def diameter_probe(ns: list[int]) -> None:
     )
 
     spark = get_spark("scaling-probe-diameter")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     def path_edges(n: int):
         return (
             spark.range(n - 1)
@@ -849,16 +812,15 @@ def diameter_probe(ns: list[int]) -> None:
             except RuntimeError:
                 label = "DNF>30"
             spark.catalog.clearCache()
-            before = exec_ids()
-            t0 = time.perf_counter()
-            comp = neardup_components(pairs, ids, algorithm="star")
-            n_comp = comp.select("component").distinct().count()
-            wall = time.perf_counter() - t0
-            m = _execution_metrics(store, exec_ids() - before)
+            with measure(spark) as m:
+                t0 = time.perf_counter()
+                comp = neardup_components(pairs, ids, algorithm="star")
+                n_comp = comp.select("component").distinct().count()
+                wall = time.perf_counter() - t0
             rounds = star_probe_info()["rounds"]
             print(
                 f"{shape:>5} {ids.count():>8} {label:>9} {wall:>8.2f} "
-                f"{m.get('shuffle bytes written', 0.0) / 2**20:>8.1f} "
+                f"{m.mb('shuffle bytes written'):>8.1f} "
                 f"{rounds:>11} {n_comp:>10}"
             )
             spark.catalog.clearCache()
@@ -896,15 +858,14 @@ def diameter_probe(ns: list[int]) -> None:
         spark.catalog.clearCache()
         results = {}
         for algo in ("star", "auto"):
-            before = exec_ids()
-            t0 = time.perf_counter()
-            comp = neardup_components(pairs, ids, algorithm=algo, max_iter=30)
-            n_comp = comp.select("component").distinct().count()
-            wall = time.perf_counter() - t0
-            m = _execution_metrics(store, exec_ids() - before)
+            with measure(spark) as m:
+                t0 = time.perf_counter()
+                comp = neardup_components(pairs, ids, algorithm=algo, max_iter=30)
+                n_comp = comp.select("component").distinct().count()
+                wall = time.perf_counter() - t0
             results[algo] = {
                 "sec": wall,
-                "mb": m.get("shuffle bytes written", 0.0) / 2**20,
+                "mb": m.mb("shuffle bytes written"),
                 "star_rounds": star_probe_info()["rounds"],
                 "star_input_nodes": star_probe_info()["input_nodes"],
                 "mode": components_probe_info().get("algorithm", "star"),
@@ -1081,15 +1042,7 @@ def text_probe(ks: list[int]) -> None:
     pruned map-side BEFORE the tf exchange; a layout that shuffled the
     full token stream would grow it K×) while wall tracks only the narrow
     tokenize scan."""
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     spark = get_spark("scaling-probe-text")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     terms = ["spark_r0", "vector_r0", "merge_r0", "stream_r0"]
 
     def bm25_top15(corpus):
@@ -1109,14 +1062,13 @@ def text_probe(ks: list[int]) -> None:
     for k in ks:
         corpus = replicated_documents_full(spark, k)
         n_docs = corpus.count()
-        before = exec_ids()
-        t0 = time.perf_counter()
-        rows = bm25_top15(corpus).collect()
-        wall = time.perf_counter() - t0
-        m = _execution_metrics(store, exec_ids() - before)
+        with measure(spark) as m:
+            t0 = time.perf_counter()
+            rows = bm25_top15(corpus).collect()
+            wall = time.perf_counter() - t0
         print(
             f"{k:>3} {n_docs:>7} {wall:>9.2f} "
-            f"{m.get('shuffle bytes written', 0.0) / 2**20:>10.2f} "
+            f"{m.mb('shuffle bytes written'):>10.2f} "
             f"{len(rows):>5}"
         )
 
@@ -1329,20 +1281,12 @@ def etl_probe(ns: list[int]) -> None:
     valid_to equals its successor's valid_from, and version counts
     reconcile with the churn arithmetic.
     """
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.operators.scd2 import (  # noqa: PLC0415
         scd2_apply,
         scd2_asof_lookup,
     )
 
     spark = get_spark("scaling-probe-etl")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     def make_dim(n: int):
         return (
             spark.range(n)
@@ -1440,14 +1384,12 @@ def etl_probe(ns: list[int]) -> None:
         for pct in (1, 10):
             dim = make_dim(n)
             stg = make_staging(n, pct)
-            before = exec_ids()
-            t0 = time.perf_counter()
-            merged = scd2_apply(dim, stg, ["k"], ["name", "score"], "2024-01-01")
-            merged.write.mode("overwrite").format("noop").save()
-            merge_wall = time.perf_counter() - t0
-            mb = _execution_metrics(store, exec_ids() - before).get(
-                "shuffle bytes written", 0.0
-            ) / 2**20
+            with measure(spark) as m:
+                t0 = time.perf_counter()
+                merged = scd2_apply(dim, stg, ["k"], ["name", "score"], "2024-01-01")
+                merged.write.mode("overwrite").format("noop").save()
+                merge_wall = time.perf_counter() - t0
+            mb = m.mb("shuffle bytes written")
             dim2 = merged.localCheckpoint(eager=True)
             dim_rows = dim2.count()
             facts = make_facts(n)
@@ -1525,17 +1467,9 @@ def etl_e2e_probe(ns: list[int]) -> None:
     import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     from etl_cloud_logistics_spark.pipelines import run_daily_etl  # noqa: PLC0415
 
     spark = get_spark("scaling-probe-etl-e2e")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     def write_inputs(path: str, n: int, day: int) -> tuple[int, int]:
         """Lay down orders/customer/supplier/lineitem for one day's dir.
         Returns (n_day_orders, n_new_keys)."""
@@ -1621,14 +1555,13 @@ def etl_e2e_probe(ns: list[int]) -> None:
             for day, run_date in ((1, "2024-06-01"), (2, "2024-06-02")):
                 src = os.path.join(root, f"src_day{day}")
                 n_orders, new_keys = write_inputs(src, n, day)
-                before = exec_ids()
-                t0 = time.time()
-                audit = run_daily_etl(
-                    spark, src, os.path.join(root, "wh"), run_date
-                )
-                wall = time.time() - t0
-                m = _execution_metrics(store, exec_ids() - before)
-                shuffle_mb = m.get("shuffle bytes written", 0.0) / 1e6
+                with measure(spark) as m:
+                    t0 = time.time()
+                    audit = run_daily_etl(
+                        spark, src, os.path.join(root, "wh"), run_date
+                    )
+                    wall = time.time() - t0
+                shuffle_mb = m.metrics.get("shuffle bytes written", 0.0) / 1e6
                 day_rows[day] = (audit, n_orders, new_keys)
                 print(
                     f"{n:>9} {day:>3} {n_orders:>9} {wall:>8.2f} "
@@ -1707,15 +1640,7 @@ def bloomrt_probe(rs: list[int]) -> None:
     default 10 GB gate (expected: no injection, identical to OFF).
     Reported per run: fact-scan output rows (the number the filter
     exists to cut), total shuffle, wall."""
-    from shuffle_audit import _execution_metrics  # noqa: PLC0415
-
     spark = get_spark("scaling-probe-bloomrt")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def exec_ids() -> set[int]:
-        listed = store.executionsList()
-        return {listed.apply(i).executionId() for i in range(listed.size())}
-
     confs = {
         "off": {"spark.sql.optimizer.runtime.bloomFilter.enabled": "false"},
         "on": {
@@ -1771,40 +1696,18 @@ def bloomrt_probe(rs: list[int]) -> None:
                     F.count("*").alias("n"),
                     F.sum(F.crc32(F.concat_ws(",", "o_id", "k"))).alias("sig"),
                 )
-                before = exec_ids()
-                t0 = time.time()
-                row = joined.collect()[0]
-                wall = time.time() - t0
-                new_ids = exec_ids() - before
-                m = _execution_metrics(store, new_ids)
-                # fact-scan output rows (the number the injected filter
-                # exists to cut) from the SQL plan graph — AQE wraps the
-                # executed plan in QueryStage nodes, so physical-plan
-                # collectLeaves() can't see the scans
-                scan_rows = 0
-                for eid in new_ids:
-                    graph = store.planGraph(eid)
-                    vals = store.executionMetrics(eid)
-                    nodes = graph.allNodes()
-                    for i in range(nodes.size()):
-                        node = nodes.apply(i)
-                        if "fact.parquet" not in node.desc():
-                            continue
-                        mets = node.metrics()
-                        for k2 in range(mets.size()):
-                            met = mets.apply(k2)
-                            if met.name() == "number of output rows":
-                                v = vals.get(met.accumulatorId())
-                                if v.isDefined():
-                                    scan_rows += int(
-                                        "".join(ch for ch in v.get() if ch.isdigit())
-                                        or 0
-                                    )
+                with measure(spark) as m:
+                    t0 = time.time()
+                    row = joined.collect()[0]
+                    wall = time.time() - t0
+                # fact-scan output rows: the number the injected filter
+                # exists to cut
+                scan_rows = m.node_metric("fact.parquet", "number of output rows")
                 checksum = (row["n"], row["sig"])
                 results[mode] = checksum
                 print(
                     f"{r:>10} {mode:>16} {wall:>7.2f} {scan_rows:>11} "
-                    f"{m.get('shuffle bytes written', 0.0) / 1e6:>10.1f} "
+                    f"{m.metrics.get('shuffle bytes written', 0.0) / 1e6:>10.1f} "
                     f"{str(checksum):>20}"
                 )
             assert len(set(results.values())) == 1, results  # equal output
