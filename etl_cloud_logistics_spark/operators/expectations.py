@@ -6,7 +6,9 @@ An expectation is (name, violation predicate).  ``run_expectations``
 evaluates EVERY expectation in one aggregation pass over the table
 (conditional counts — no per-check scan, which is what makes a 50-check
 suite affordable on a 100 TB fact) and returns a long-format report:
-(expectation, n_rows, n_violations, passed).
+(expectation, n_rows, n_violations, passed).  The report is the one
+aggregate row unpivoted, never a union of per-expectation selects: each
+union branch would re-plan the aggregate, and Catalyst runs every copy.
 
 Uniqueness checks need a distinct count and ride the same single agg.
 """
@@ -48,7 +50,11 @@ def run_expectations(
     expectations: list[Expectation],
     unique_cols: list[str] | None = None,
 ) -> DataFrame:
-    """One aggregation pass → long-format report, deterministic order."""
+    """One aggregation pass → long-format report, ordered by expectation.
+
+    The single aggregate row is unpivoted in place (``inline`` over an
+    array of per-expectation structs), so the executed plan scans ``df``
+    once however many expectations there are."""
     aggs = [F.count(F.lit(1)).alias("__n")]
     for i, e in enumerate(expectations):
         aggs.append(
@@ -56,28 +62,20 @@ def run_expectations(
         )
     for j, c in enumerate(unique_cols or []):
         aggs.append(F.countDistinct(c).alias(f"__d{j}"))
-    row = df.agg(*aggs)
 
-    reports = []
-    for i, e in enumerate(expectations):
-        reports.append(
-            row.select(
-                F.lit(e.name).alias("expectation"),
-                F.col("__n").alias("n_rows"),
-                F.col(f"__v{i}").cast("bigint").alias("n_violations"),
-                (F.col(f"__v{i}") == 0).alias("passed"),
-            )
+    def report(name: str, n_violations: Column, passed: Column) -> Column:
+        return F.struct(
+            F.lit(name).alias("expectation"),
+            F.col("__n").alias("n_rows"),
+            n_violations.cast("bigint").alias("n_violations"),
+            passed.alias("passed"),
         )
-    for j, c in enumerate(unique_cols or []):
-        reports.append(
-            row.select(
-                F.lit(f"{c}_unique").alias("expectation"),
-                F.col("__n").alias("n_rows"),
-                (F.col("__n") - F.col(f"__d{j}")).cast("bigint").alias("n_violations"),
-                (F.col("__n") == F.col(f"__d{j}")).alias("passed"),
-            )
-        )
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("expectation")
+
+    reports = [
+        report(e.name, F.col(f"__v{i}"), F.col(f"__v{i}") == 0)
+        for i, e in enumerate(expectations)
+    ] + [
+        report(f"{c}_unique", F.col("__n") - F.col(f"__d{j}"), F.col("__n") == F.col(f"__d{j}"))
+        for j, c in enumerate(unique_cols or [])
+    ]
+    return df.agg(*aggs).select(F.inline(F.array(*reports))).orderBy("expectation")

@@ -4,17 +4,36 @@ The reference generates Snowflake ``MERGE INTO … WHEN MATCHED → close old
 version / WHEN NOT MATCHED → insert`` plus a second-pass insert of new
 versions (``scripts/05_etl_pipeline/etl_pipeline.py:1044-1084``) — and then
 leaves execution commented out (``:1087-1090``).  This module is the
-completed, engine-native version: one join to classify staging rows, then a
-``unionByName`` rewrite of the dimension.
+completed, engine-native version.
 
 Spark-first design (no Delta MERGE dependency):
 - the dimension is rewritten functionally (immutable snapshots — idiomatic
   for a lake), instead of updated in place;
-- one hash join on the natural key classifies rows as unchanged / changed /
-  new — at 100 TB the join shuffles once on the key and AQE handles skew;
-  history rows (``is_current = false``) are never touched or shuffled;
+- history rows (``is_current = false``) pass through untouched and are
+  never joined or shuffled;
 - change detection compares the tracked columns null-safely (``eqNullSafe``),
   mirroring the MERGE's ``ON pk AND is_current`` + attribute comparison.
+
+Plan contract: ``scd2_apply`` is two joins on the natural key, each over
+the open rows once —
+
+1. open rows LEFT OUTER JOIN staging: each open row becomes, through one
+   ``inline``, either itself (no staging row, or no tracked change) or its
+   closed version plus its successor;
+2. staging LEFT OUTER JOIN open keys, unmatched rows only: the brand-new
+   keys.  This is an anti join written as a null filter on purpose:
+   Catalyst pushes a ``left_anti`` join down into staging's own joins and
+   aggregates, which computes staging a second time; the outer form keeps
+   staging's subtree identical in both joins, so AQE reuses its stages.
+
+Staging is the daily slice, so join 1 broadcasts it and the open rows
+stream through without a shuffle; join 2 builds on the open rows' key
+column alone.  It is deliberately not ONE full outer join: a broadcast
+hash join cannot build a full outer join, so that form shuffles the whole
+open dimension every run (15.0 MB on the ``tools/scaling_probe.py --etl``
+1e6-key, 10 %-churn merge, where the two-join form shuffles nothing).  A
+union of per-outcome filters over one join is no better: Catalyst plans
+the join once per branch.
 
 Invariants (asserted in tests, per SURVEY.md §5):
 - exactly one ``is_current`` row per natural key;
@@ -56,57 +75,47 @@ def scd2_apply(
     attrs = [c for c in current.columns if c not in (VALID_FROM, VALID_TO, IS_CURRENT)]
 
     history = current.filter(~F.col(IS_CURRENT))
-    open_rows = current.filter(F.col(IS_CURRENT))
-
-    stg = staging.alias("stg")
+    # a row without its first natural key never matches and is dropped
+    open_rows = current.filter(F.col(IS_CURRENT) & F.col(keys[0]).isNotNull())
+    stg = staging.filter(F.col(keys[0]).isNotNull()).alias("stg")
     cur = open_rows.alias("cur")
     key_cond = F.lit(True)
     for k in keys:
         key_cond = key_cond & F.col(f"stg.{k}").eqNullSafe(F.col(f"cur.{k}"))
 
-    joined = stg.join(cur, key_cond, "full_outer")
-    in_stg = F.col(f"stg.{keys[0]}").isNotNull()
-    in_cur = F.col(f"cur.{keys[0]}").isNotNull()
-    changed = in_stg & in_cur & _any_attr_changed(tracked)
+    def version(side: str, valid_from: Column, valid_to: Column, is_current: Column) -> Column:
+        return F.struct(
+            *[F.col(f"{side}.{c}").alias(c) for c in attrs],
+            valid_from.alias(VALID_FROM),
+            valid_to.alias(VALID_TO),
+            is_current.alias(IS_CURRENT),
+        )
 
-    # current rows that survive unchanged (incl. keys absent from staging —
-    # the daily extract is incremental, absence is not a delete)
-    unchanged = joined.filter(in_cur & ~changed).select(
-        *[F.col(f"cur.{c}").alias(c) for c in attrs],
-        F.col(f"cur.{VALID_FROM}").alias(VALID_FROM),
-        F.col(f"cur.{VALID_TO}").alias(VALID_TO),
-        F.col(f"cur.{IS_CURRENT}").alias(IS_CURRENT),
+    # every open row once: kept as is (incl. keys absent from staging — the
+    # daily extract is incremental, absence is not a delete), or MERGE
+    # matched-and-changed → closed (etl_pipeline.py:1053-1060) plus its
+    # successor, the second-pass insert (etl_pipeline.py:1069-1084)
+    changed = F.col(f"stg.{keys[0]}").isNotNull() & _any_attr_changed(tracked)
+    kept = version(
+        "cur", F.col(f"cur.{VALID_FROM}"), F.col(f"cur.{VALID_TO}"), F.col(f"cur.{IS_CURRENT}")
     )
-
-    # MERGE matched-and-changed → close the old version (etl_pipeline.py:1053-1060)
-    closed = joined.filter(changed).select(
-        *[F.col(f"cur.{c}").alias(c) for c in attrs],
-        F.col(f"cur.{VALID_FROM}").alias(VALID_FROM),
-        eff.alias(VALID_TO),
-        F.lit(False).alias(IS_CURRENT),
-    )
-
-    # second-pass insert of the new versions (etl_pipeline.py:1069-1084)
-    new_versions = joined.filter(changed).select(
-        *[F.col(f"stg.{c}").alias(c) for c in attrs],
-        eff.alias(VALID_FROM),
-        F.lit(None).cast("date").alias(VALID_TO),
-        F.lit(True).alias(IS_CURRENT),
+    closed = version("cur", F.col(f"cur.{VALID_FROM}"), eff, F.lit(False))
+    successor = version("stg", eff, F.lit(None).cast("date"), F.lit(True))
+    rewritten = cur.join(stg, key_cond, "left").select(
+        F.inline(F.when(changed, F.array(closed, successor)).otherwise(F.array(kept)))
     )
 
     # MERGE not-matched → brand-new keys (etl_pipeline.py:1062-1066)
-    brand_new = joined.filter(in_stg & ~in_cur).select(
-        *[F.col(f"stg.{c}").alias(c) for c in attrs],
-        eff.alias(VALID_FROM),
-        F.lit(None).cast("date").alias(VALID_TO),
-        F.lit(True).alias(IS_CURRENT),
+    brand_new = (
+        stg.join(cur, key_cond, "left")
+        .filter(F.col(f"cur.{keys[0]}").isNull())
+        .select(successor.alias("v"))
+        .select("v.*")
     )
 
     return (
         history.select(*attrs, VALID_FROM, VALID_TO, IS_CURRENT)
-        .unionByName(unchanged)
-        .unionByName(closed)
-        .unionByName(new_versions)
+        .unionByName(rewritten)
         .unionByName(brand_new)
     )
 

@@ -9,11 +9,14 @@ Key departures from the reference, all deliberate (SURVEY.md §3.2):
 - the SCD2 merge actually executes (the reference generates the MERGE SQL
   and leaves it commented out, etl_pipeline.py:1087-1090);
 - loads are partitioned parquet with dynamic partition overwrite, so
-  re-running a day is idempotent instead of append-duplicating.
+  re-running a day is idempotent instead of append-duplicating;
+- every audit count is an ``Observation`` on the write that lands the
+  rows, so no table is re-read or re-computed to be counted.
 
 Scale notes (100 TB): the only wide operations per run are (a) the fact's
-orders⋈lineitem join, keyed on orderkey, and (b) the SCD2 classify join,
-keyed on the natural key — both single shuffles AQE can size and de-skew.
+orders⋈lineitem join, keyed on orderkey, and (b) the SCD2 merge's two joins,
+keyed on the natural key — single shuffles AQE can size and de-skew, and
+none at all while the day's staging set is broadcast-sized.
 Dimension lookups broadcast.  The daily extract is partition-pruned by the
 run date, so cost scales with the day's slice, not table history.
 """
@@ -25,7 +28,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table
@@ -71,6 +74,14 @@ class EtlAudit:
 
 def _path(warehouse: str, name: str) -> str:
     return os.path.join(warehouse, name)
+
+
+def _observed(df: DataFrame, rows: Column | None = None) -> tuple[DataFrame, Observation]:
+    """``df`` carrying an observation of its row count (or of the ``rows``
+    aggregate), which the action that runs it fills in; read it with
+    ``obs.get["n"]``.  A ``count`` is 0, never NULL, on an empty input."""
+    obs = Observation()
+    return df.observe(obs, (F.count(F.lit(1)) if rows is None else rows).alias("n")), obs
 
 
 def extract_orders_for_date(spark: SparkSession, sf_dir: str, run_date: str) -> DataFrame:
@@ -201,8 +212,9 @@ def _refresh_report(
         F.round(F.sum("sum_revenue") / F.sum("n_orders"), 2).alias("avg_revenue"),
         F.sum("n_qa_failed").alias("n_qa_failed"),
     )
+    report, written = _observed(report)
     report.write.mode("overwrite").parquet(out_path)
-    return spark.read.parquet(out_path).count()
+    return written.get["n"]
 
 
 def run_daily_etl(
@@ -224,27 +236,31 @@ def run_daily_etl(
     try:
         # -- extract (pushdown) + raw staging ---------------------------------
         day_orders = extract_orders_for_date(spark, sf_dir, run_date)
-        write_json_staging(day_orders, _path(warehouse, "staging"), batch_id=run_date)
-        audit.records["staging"] = day_orders.count()
+        staged, staged_obs = _observed(day_orders)
+        write_json_staging(staged, _path(warehouse, "staging"), batch_id=run_date)
+        audit.records["staging"] = staged_obs.get["n"]
 
-        # -- dim_date: incremental anti-join insert (J7) -----------------------
+        # -- dim_date: incremental anti-join insert (J7); its count is the
+        # existing rows (seen by the anti-join's build side) plus the new -----
         dim_date_path = _path(warehouse, "dim_date")
         new_dates = generate_dim_date(spark, run_date, run_date)
+        observed = []
         if os.path.exists(dim_date_path):
-            existing = spark.read.parquet(dim_date_path)
+            existing, existing_obs = _observed(spark.read.parquet(dim_date_path))
+            observed.append(existing_obs)
             new_dates = new_dates.join(
                 existing.select("date_key"), "date_key", "left_anti"
             )
-            new_dates.write.mode("append").parquet(dim_date_path)
-        else:
-            new_dates.write.mode("overwrite").parquet(dim_date_path)
-        audit.records["dim_date"] = spark.read.parquet(dim_date_path).count()
+        new_dates, new_obs = _observed(new_dates)
+        new_dates.write.mode("append").parquet(dim_date_path)
+        audit.records["dim_date"] = sum(o.get["n"] for o in [*observed, new_obs])
 
         # -- SCD2 dimension merges (J8/J9) — BOTH tracked dims, mirroring the
         # reference's dual SCD2 on dim_vehicle + dim_driver (04:53-85) -------
         def scd2_refresh(
-            dim_path: str, staging: DataFrame, keys: list[str], tracked: list[str]
+            dim_name: str, staging: DataFrame, keys: list[str], tracked: list[str]
         ) -> DataFrame:
+            dim_path = _path(warehouse, dim_name)
             if os.path.exists(dim_path):
                 current = spark.read.parquet(dim_path)
             else:
@@ -254,15 +270,17 @@ def run_daily_etl(
                     .withColumn("valid_to", F.lit(None).cast("date"))
                     .withColumn("is_current", F.lit(True))
                 )
-            merged = scd2_apply(
-                current, staging, keys=keys, tracked=tracked, effective_date=run_date
+            merged, merged_obs = _observed(
+                scd2_apply(
+                    current, staging, keys=keys, tracked=tracked, effective_date=run_date
+                )
             )
             # functional rewrite: land the snapshot NEXT TO the live dim, then
             # swap by rename — a crash anywhere leaves a complete dimension
             atomic_overwrite(merged, dim_path)
+            audit.records[dim_name] = merged_obs.get["n"]
             return spark.read.parquet(dim_path)
 
-        dim_cust_path = _path(warehouse, "dim_customer")
         staging_cust = (
             day_orders.select(F.col("o_custkey").alias("c_custkey"))
             .distinct()
@@ -270,12 +288,10 @@ def run_daily_etl(
             .select(*DIM_CUSTOMER_KEYS, *DIM_CUSTOMER_TRACKED)
         )
         dim_customer = scd2_refresh(
-            dim_cust_path, staging_cust, DIM_CUSTOMER_KEYS, DIM_CUSTOMER_TRACKED
+            "dim_customer", staging_cust, DIM_CUSTOMER_KEYS, DIM_CUSTOMER_TRACKED
         )
-        audit.records["dim_customer"] = dim_customer.count()
 
         lineitem = load_table(spark, sf_dir, "lineitem")
-        dim_supp_path = _path(warehouse, "dim_supplier")
         staging_supp = (
             day_orders.select("o_orderkey")
             .join(lineitem, day_orders.o_orderkey == lineitem.l_orderkey)
@@ -284,20 +300,14 @@ def run_daily_etl(
             .join(load_table(spark, sf_dir, "supplier"), "s_suppkey")
             .select(*DIM_SUPPLIER_KEYS, *DIM_SUPPLIER_TRACKED)
         )
-        dim_supplier = scd2_refresh(
-            dim_supp_path, staging_supp, DIM_SUPPLIER_KEYS, DIM_SUPPLIER_TRACKED
-        )
-        audit.records["dim_supplier"] = dim_supplier.count()
+        scd2_refresh("dim_supplier", staging_supp, DIM_SUPPLIER_KEYS, DIM_SUPPLIER_TRACKED)
 
-        # -- fact build + partitioned load (S7) --------------------------------
-        fact = build_fact_orders(day_orders, lineitem, dim_customer)
+        # -- fact build + partitioned load (S7); every row lands in the run
+        # date's partition, which the dynamic overwrite replaces ------------
+        fact, fact_obs = _observed(build_fact_orders(day_orders, lineitem, dim_customer))
         fact_path = _path(warehouse, "fact_orders")
         write_partitioned_lake(fact, fact_path, date_col="o_orderdate")
-        audit.records["fact_orders"] = (
-            spark.read.parquet(fact_path)
-            .filter(F.col("ingest_date") == F.lit(run_date).cast("date"))
-            .count()
-        )
+        audit.records["fact_orders"] = fact_obs.get["n"]
 
         # -- data-quality gate over the day's slice ----------------------------
         from .operators.expectations import (
@@ -318,13 +328,14 @@ def run_daily_etl(
             ],
             unique_cols=["o_orderkey"],
         ).withColumn("run_date", F.lit(run_date).cast("date"))
+        dq, dq_obs = _observed(dq, F.count(F.when(~F.col("passed"), 1)))
         (
             dq.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("run_date")
             .parquet(_path(warehouse, "dq_reports"))
         )
-        audit.records["dq_failed"] = dq.filter(~F.col("passed")).count()
+        audit.records["dq_failed"] = dq_obs.get["n"]
 
         # -- report refresh: BOTH pre-aggregated tables (ref loads driver AND
         # route totals every run, etl_pipeline.py:1100-1132) -------------------

@@ -3,6 +3,7 @@ runs, SCD2 invariants, idempotent re-run, audit trail."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 
@@ -174,6 +175,69 @@ def test_pipeline_writes_dq_report(spark, sf_small, tmp_path):
         "o_orderkey_unique",
     }
     assert dq.filter(~F.col("passed")).count() == 0
+
+
+def _recount(spark, wh, run_date, staging_before):
+    """Every audit record recounted from the tables the run wrote."""
+    read = lambda name: spark.read.parquet(os.path.join(wh, name))  # noqa: E731
+    day = F.lit(run_date).cast("date")
+    return {
+        "staging": read("staging").count() - staging_before,
+        "dim_date": read("dim_date").count(),
+        "dim_customer": read("dim_customer").count(),
+        "dim_supplier": read("dim_supplier").count(),
+        "fact_orders": read("fact_orders").filter(F.col("ingest_date") == day).count(),
+        "dq_failed": read("dq_reports")
+        .filter((F.col("run_date") == day) & ~F.col("passed"))
+        .count(),
+        "report_segment_totals": read("report_segment_totals").count(),
+        "report_status_totals": read("report_status_totals").count(),
+    }
+
+
+def test_daily_etl_audit_equals_recount(spark, sf_small, tmp_path):
+    """The audit counts are observed on the writes, not re-read: over two
+    busy days, a same-day rerun and a day without orders, each equals a
+    recount of what landed, and the empty day reports 0, not None."""
+    wh = str(tmp_path / "wh_audit")
+    day1, day2 = _two_busy_days(spark, sf_small)
+    first = (
+        load_table(spark, sf_small, "orders")
+        .agg(F.min(F.to_date("o_orderdate")).alias("d"))
+        .first()["d"]
+    )
+    empty_day = (first - dt.timedelta(days=1)).isoformat()
+    staged = 0
+    for run_date in (day1, day2, day2, empty_day):
+        audit = run_daily_etl(spark, sf_small, wh, run_date)
+        assert audit.records == _recount(spark, wh, run_date, staged), run_date
+        staged += audit.records["staging"]
+        log = [
+            json.loads(line)
+            for f in os.listdir(os.path.join(wh, "load_logs"))
+            if f.endswith(".json")
+            for line in open(os.path.join(wh, "load_logs", f))
+            if line.strip()
+        ]
+        assert str(audit.records) in {r["detail"] for r in log if r["run_date"] == run_date}
+    assert audit.records["staging"] == 0
+    assert audit.records["fact_orders"] == 0
+    assert audit.records["dq_failed"] == 0
+
+
+def test_daily_etl_execution_budget(spark, sf_small, tmp_path):
+    """A steady-state day runs one SQL execution per write (staging,
+    dim_date, two dimensions, fact, DQ report, two per report table, audit
+    row) and no audit count()."""
+    from etl_cloud_logistics_spark.metrics import measure
+
+    wh = str(tmp_path / "wh_budget")
+    day1, day2 = _two_busy_days(spark, sf_small)
+    run_daily_etl(spark, sf_small, wh, day1)
+    with measure(spark) as m:
+        run_daily_etl(spark, sf_small, wh, day2)
+    assert m.executions <= 11, [r.description for r in m.rows]
+    assert not [r for r in m.rows if r.description.startswith("count at")]
 
 
 def test_run_curation_export_end_to_end(spark, sf_small, tmp_path):

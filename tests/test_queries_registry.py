@@ -107,6 +107,27 @@ def test_extra_query_values_match_oracle(spark, sf_small, duck, name):
     )
 
 
+def test_run_expectations_scans_its_input_once(spark, sf_small, duck):
+    """The DQ report is one aggregate row unpivoted: however many
+    expectations, the executed plan reads the parquet input once — and the
+    registry row built on it still equals its oracle."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools.verify_local import compare, typed_hash
+
+    spec = REGISTRY["dq_expectations_orders"]
+    df = spec.fn(spark, sf_small)
+    sdf = df.toPandas()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count("Scan parquet") == 1, final
+    ddf = duck.execute(spec.oracle).df()
+    assert not compare(spec.name, sdf, ddf)
+    assert typed_hash(sdf) == typed_hash(ddf)
+
+
 def test_sql_api_over_registered_views(spark, sf_small):
     """spark.sql over the catalog's temp views matches the DataFrame path —
     the engine's second entry point (SURVEY.md §3.1)."""

@@ -1263,8 +1263,9 @@ def etl_probe(ns: list[int]) -> None:
       versions) and a staging extract with the churn fraction changed
       plus 1% brand-new keys, then time ``scd2_apply`` (noop sink) and
       record its measured shuffle.  The expected slope is ~linear in N:
-      the classify step is ONE full-outer hash join on the natural key
-      and the rewrite is a union of narrow projections.
+      the merge is two joins on the natural key (open rows against the
+      broadcast staging, staging against the open keys), see
+      ``operators/scd2.py``.
     - run the as-of fact lookup (4 facts per key, timestamps straddling
       the version boundary so every match arm is exercised) BOTH ways:
       ``broadcast_dim=True`` (the pre-r10 forced hint — fine for real
@@ -1375,7 +1376,7 @@ def etl_probe(ns: list[int]) -> None:
         f"(load1={os.getloadavg()[0]:.2f})"
     )
     print(
-        f"{'keys':>9} {'churn%':>6} {'merge_sec':>9} {'merge_MB':>8} "
+        f"{'keys':>9} {'churn%':>6} {'merge_sec':>9} {'merge_MB':>8} {'merge_jobs':>10} "
         f"{'dim_rows':>9} {'asof_bcast':>10} {'asof_auto':>9} {'auto_join':>9} "
         f"{'match_ok':>8}"
     )
@@ -1401,7 +1402,8 @@ def etl_probe(ns: list[int]) -> None:
             )
             ok = (n_b, h_b) == (n_a, h_a)
             print(
-                f"{n:>9} {pct:>6} {merge_wall:>9.2f} {mb:>8.1f} {dim_rows:>9} "
+                f"{n:>9} {pct:>6} {merge_wall:>9.2f} {mb:>8.1f} "
+                f"{sum(r.jobs for r in m.rows):>10} {dim_rows:>9} "
                 f"{w_b:>10.2f} {w_a:>9.2f} {strat:>9} {str(ok):>8}"
             )
             if n == largest and pct == 10:
@@ -1546,7 +1548,7 @@ def etl_e2e_probe(ns: list[int]) -> None:
     print("composed daily-ETL probe: run_daily_etl end-to-end per tier")
     print(
         f"{'keys':>9} {'day':>3} {'orders':>9} {'wall_sec':>8} "
-        f"{'shuffle_MB':>10} {'dim_cust':>9} {'fact_day':>9}"
+        f"{'shuffle_MB':>10} {'execs':>5} {'jobs':>4} {'dim_cust':>9} {'fact_day':>9}"
     )
     for n in ns:
         root = tempfile.mkdtemp(prefix=f"etl_e2e_{n}_")
@@ -1565,7 +1567,8 @@ def etl_e2e_probe(ns: list[int]) -> None:
                 day_rows[day] = (audit, n_orders, new_keys)
                 print(
                     f"{n:>9} {day:>3} {n_orders:>9} {wall:>8.2f} "
-                    f"{shuffle_mb:>10.1f} {audit.records['dim_customer']:>9} "
+                    f"{shuffle_mb:>10.1f} {m.executions:>5} "
+                    f"{sum(r.jobs for r in m.rows):>4} {audit.records['dim_customer']:>9} "
                     f"{audit.records['fact_orders']:>9}"
                 )
                 assert audit.status == "success"
